@@ -455,8 +455,12 @@ def sized_block_salts(
     ``stats`` (r15): optional dict; when given, ONE extra scalar
     aggregate over the block histogram (a driver job returning 3
     numbers — the j9/rj2 bounded-probe pattern) records
-    ``stats["replicated_rows"]`` (exact post-salt row count per pair
-    side: rows + oversized-block excess), ``stats["n_rows"]`` and
+    ``stats["replicated_rows"]`` (rows + oversized-block excess, i.e.
+    sum of population x salts: an UPPER BOUND on the rows either pair
+    side carries after :func:`salted_block_pairs` replication — exact
+    for unsalted blocks; a block with ns salts puts ~bn*(ns+1)/2 rows on
+    each side, so there it approximates the two sides COMBINED and only
+    over-provisions the pair exchange), ``stats["n_rows"]`` and
     ``stats["max_width"]`` (max array size of ``size_col``), so the
     caller can size the pair exchange to the REPLICATED volume instead
     of a core-count constant (the 2M realdim hash-build OOM)."""
@@ -530,7 +534,12 @@ def embedding_neardup_pairs(
     bit-identical: same fold shapes, same multiply order, and both dot
     and the norm product are exactly symmetric under operand swap, so
     the least/greatest orientation from salted_block_pairs changes
-    nothing. Pairing/skew balance: salted_block_pairs."""
+    nothing. Pairing/skew balance: salted_block_pairs.
+
+    EAGER: the call itself runs one Spark job (the salt histogram probe
+    in :func:`sized_block_salts`, which also materializes the lazy
+    checkpoint of the projected input), so building the frame — even
+    for a plan dump or a branch never executed — pays a scan of ``df``."""
     from es_to_clickhouse_spark.operators.similarity import dot, norm
 
     n_tasks = df.sparkSession.sparkContext.defaultParallelism
@@ -599,10 +608,11 @@ def embedding_neardup_pairs(
     # ~build_bytes/n_parts per partition, and the old defaultParallelism
     # pin — a LOCAL core-count constant — OOM'd the hash build at
     # 2M x dim-768 (~30 GB replicated build side over 32 partitions).
-    # sized_block_salts' one bounded scalar probe yields the exact
-    # post-salt row count and max vector width; target ~64 MB of raw
-    # build payload per partition (floats ride raw; x6 bytes/element
-    # covers the double-cast prefix, scalars and row framing), clamped
+    # sized_block_salts' one bounded scalar probe yields an upper bound
+    # on the post-salt rows per pair side and the max vector width;
+    # target ~64 MB of raw build payload per partition (floats ride
+    # raw; x6 bytes/element covers the double-cast prefix, scalars and
+    # row framing), clamped
     # to [defaultParallelism, 32768]. At bench scale the estimate stays
     # under one partition's budget and the plan is unchanged (n_parts =
     # defaultParallelism).
@@ -796,6 +806,9 @@ def screen_against_store(
             ["band_id", "band_key"],
         )
         .select("_bid", "_hid")
+        # a document re-sent under its own id (a later updated_at) is an
+        # update, not a near-dup of the signature it stored last time
+        .where(F.col("_bid") != F.col("_hid"))
         .distinct()
         # referenced twice below (verify join + token-side prune)
         .localCheckpoint(eager=False)

@@ -1066,23 +1066,30 @@ def fetch_mapping(session: ScrollSession, index: str) -> dict:
     return get_json(session, f"/{index}/_mapping")
 
 
-def probe_time_values(session: ScrollSession, index: str, field: str) -> bool:
-    """1-document existence probe: does the index hold ANY non-null
-    value for ``field``? Public ``exists`` query DSL, ``size: 1``, no
-    scroll param (so no server-side cursor), idempotent-retried. Used
-    by the ``skipped_no_time_field`` hold (ADVICE r10 low) to notice
-    when real timestamps MATERIALIZE after a bootstrap that found none
-    — without it the hold is permanent and only a manual state reset
-    recovers the index. Any failure answers False: the hold continues,
-    never crashes the poll loop."""
+def search_hit(session: ScrollSession, index: str, query: dict) -> bool:
+    """One-request existence probe: does ANY document of ``index`` match
+    ``query``? A ``size: 1`` search with no scroll param (so no
+    server-side cursor), idempotent-retried. Wire failures raise; each
+    caller picks its own safe answer."""
     req = {
         "method": "POST",
         "url": f"{session.host}/{index}/_search",
-        "body": {"query": {"exists": {"field": field}}, "size": 1},
+        "body": {"query": query, "size": 1},
     }
+    resp = session._send(req, idempotent=True)
+    return bool(resp.get("hits", {}).get("hits"))
+
+
+def probe_time_values(session: ScrollSession, index: str, field: str) -> bool:
+    """Does the index hold ANY non-null value for ``field``? A
+    :func:`search_hit` over the public ``exists`` query DSL. Used by the
+    ``skipped_no_time_field`` hold (ADVICE r10 low) to notice when real
+    timestamps MATERIALIZE after a bootstrap that found none — without
+    it the hold is permanent and only a manual state reset recovers the
+    index. Any failure answers False: the hold continues, never crashes
+    the poll loop."""
     try:
-        resp = session._send_text(req, idempotent=True, _parse=True)
-        return bool(resp.get("hits", {}).get("hits"))
+        return search_hit(session, index, {"exists": {"field": field}})
     except Exception:
         return False
 
@@ -1110,7 +1117,9 @@ def sync_incremental_es_http(
        ``--start-date``); neither → FULL match_all scan seeding state
        (auto semantics — the reference ES daemon instead refuses,
        es/es_to_bytehouse.py:968-971; the full-bootstrap divergence
-       matches our CLI's auto mode);
+       matches our CLI's auto mode); an incremental round first sends
+       one :func:`search_hit` with its ranged query, and no hit ends
+       the round as ``("incremental", 0, since)`` with no Spark job;
     2. the index reads DISTRIBUTED (:func:`read_index_http`: N sliced
        scroll contexts drained ON THE EXECUTORS, NDJSON parsed
        JVM-side), then ``localCheckpoint``s — ONE wire drain feeds the
@@ -1168,6 +1177,16 @@ def sync_incremental_es_http(
         query = json.loads(
             range_query(original, since, update_field, since_update)
         )["query"]
+        # Idle-round probe: one size-1 search with the round's own
+        # query answers "nothing new" without the sliced drain's jobs
+        # and per-slice scroll contexts. A probe error falls through to
+        # the drain, which surfaces wire failures under its own contract.
+        try:
+            idle = not search_hit(session, index, query)
+        except Exception:
+            idle = False
+        if idle:
+            return mode, 0, since
     else:
         query = None
     # mapping-derived schema, ORIGINAL names, dates-as-strings: typed

@@ -11,7 +11,8 @@ request shapes (the ones :class:`sources.es.ScrollSession` emits):
   bool-should-ranges queries, optional ``slice: {id, max}`` partitioning
   (deterministic md5-of-_id routing; any consistent-and-complete
   partition satisfies the client contract), optional ascending sort,
-  ``size``-bounded first page with a fresh ``_scroll_id``;
+  ``size``-bounded first page with a fresh ``_scroll_id``; without
+  ``scroll`` (the size-1 probes) one page and no cursor;
 - ``POST /_search/scroll`` — next page for a cursor;
 - ``DELETE /_search/scroll`` — context cleanup.
 
@@ -219,6 +220,10 @@ def make_handler(docs, log=None, cleanups=None, index="events", mapping=None,
                 }
                 for d in rows
             ]
+            params = urllib.parse.parse_qs(urllib.parse.urlsplit(self.path).query)
+            if "scroll" not in params:
+                # a plain search (the size-1 probes) opens no cursor
+                return self._reply({"hits": {"hits": hits[: body.get("size", 10)]}})
             sid = f"ctx-{next(counter)}"
             with lock:
                 cursors[sid] = hits

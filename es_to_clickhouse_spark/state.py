@@ -14,9 +14,22 @@ the latest row per source table:
 
 Here the state lives as an append-only parquet table inside the target
 warehouse — same queryability, and the append-only + latest-wins design
-means state commits are cheap blind appends at any scale (no read-modify-
+means state commits are blind appends at any scale (no read-modify-
 write). Latest-row reads use a window (`row_number() = 1`), the Spark
 expression of the reference's ORDER BY … DESC LIMIT 1.
+
+A sync round's state traffic is answered on the driver:
+
+- ``get`` / ``has_synced_before`` read an in-memory copy of the latest
+  row per table. The copy is valid while the set of ``*.parquet`` part
+  names under ``_sync_state`` (one Hadoop ``listStatus``, no Spark job)
+  equals the set it was loaded from or last wrote; any part it did not
+  write (another process committed, or an older snapshot of the
+  directory was restored) triggers one full re-read.
+- ``commit`` writes its row as JVM-side literals over a one-partition
+  ``range`` — no Python worker — so each commit adds exactly one part,
+  and the copy takes the row only when the listing grew by exactly that
+  part.
 
 Watermarks are kept as *strings* in the table for reference parity
 (lexicographic ISO compare — es/es_to_bytehouse.py:912,918) but the engine
@@ -25,11 +38,11 @@ compares typed values internally (SURVEY §7.4 risk 3).
 
 from __future__ import annotations
 
-import uuid
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, replace
 from datetime import datetime, timezone
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -64,7 +77,8 @@ class SyncState:
 
 
 class StateStore:
-    """Append-only ``_sync_state`` parquet table under the warehouse root."""
+    """Append-only ``_sync_state`` parquet table under the warehouse root,
+    with the latest row per table cached on the driver."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
@@ -72,9 +86,52 @@ class StateStore:
         # (file:// hdfs:// s3a://) — never driver-local os.* calls.
         self.path = fsio.join(warehouse, "_sync_state")
         fsio.mkdirs(spark, warehouse)
+        #: table -> (updated_at, SyncState) of its latest row; valid while
+        #: the part listing equals ``_parts`` (None: not loaded yet)
+        self._latest: dict[str, tuple[datetime, SyncState]] = {}
+        self._parts: frozenset[str] | None = None
+        # streaming foreachBatch threads share one store: a commit's
+        # "the one new part is mine" check must not interleave with
+        # another thread's commit or reload
+        self._lock = threading.Lock()
+        if not self._list_parts():
+            self._parts = frozenset()  # an empty store needs no read
 
     def _exists(self) -> bool:
         return fsio.has_glob(self.spark, fsio.join(self.path, "*.parquet"))
+
+    def _list_parts(self) -> frozenset[str]:
+        return frozenset(
+            n for n in fsio.listdir(self.spark, self.path) if n.endswith(".parquet")
+        )
+
+    def _cached(self) -> dict[str, tuple[datetime, SyncState]]:
+        """The latest row per table, re-read only when the part listing
+        differs from the one the cache holds. The listing is taken
+        BEFORE the read: a part landing in between makes the next call
+        re-read, never hides the part."""
+        with self._lock:
+            parts = self._list_parts()
+            if parts != self._parts:
+                rows = self.latest().collect() if parts else []
+                self._latest = {
+                    r.table_name: (
+                        r.updated_at,
+                        SyncState(
+                            table_name=r.table_name,
+                            source_name=r.source_name,
+                            time_field=r.time_field,
+                            update_time_field=r.update_time_field,
+                            last_sync_time=r.last_sync_time,
+                            last_update_time=r.last_update_time,
+                            last_id=r.last_id,
+                            last_sync_count=r.last_sync_count or 0,
+                        ),
+                    )
+                    for r in rows
+                }
+                self._parts = parts
+            return self._latest
 
     def read_all(self):
         if not self._exists():
@@ -93,51 +150,46 @@ class StateStore:
         )
 
     def get(self, table_name: str) -> SyncState | None:
-        rows = self.latest().where(F.col("table_name") == table_name).collect()
-        if not rows:
-            return None
-        r = rows[0]
-        return SyncState(
-            table_name=r.table_name,
-            source_name=r.source_name,
-            time_field=r.time_field,
-            update_time_field=r.update_time_field,
-            last_sync_time=r.last_sync_time,
-            last_update_time=r.last_update_time,
-            last_id=r.last_id,
-            last_sync_count=r.last_sync_count or 0,
-        )
+        """The table's latest row, from the listing-validated cache (no
+        Spark job unless a part this instance did not write appeared)."""
+        hit = self._cached().get(table_name)
+        return replace(hit[1]) if hit else None
 
     def has_synced_before(self, table_name: str) -> bool:
         """Auto-mode probe (mongodb/mongodb_to_bytehouse.py:285-295)."""
-        return (
-            self.read_all().where(F.col("table_name") == table_name).limit(1).count()
-            > 0
-        )
+        return table_name in self._cached()
 
     def commit(self, state: SyncState) -> None:
         """Append one watermark row (es/es_to_bytehouse.py:454-465). Blind
-        append — no shuffle, no read — so commits stay O(1) at scale."""
-        row = Row(
-            table_name=state.table_name,
-            source_name=state.source_name,
-            time_field=state.time_field,
-            update_time_field=state.update_time_field,
-            last_sync_time=state.last_sync_time,
-            last_update_time=state.last_update_time,
-            last_id=state.last_id,
-            last_sync_count=state.last_sync_count,
-            updated_at=datetime.now(timezone.utc).replace(tzinfo=None),
-        )
-        df = self.spark.createDataFrame([row], STATE_SCHEMA).coalesce(1)
-        # unique filename per commit via uuid inside a single-file append
-        df.write.mode("append").parquet(self.path)
+        append — no shuffle, no read — so commits stay O(1) at scale.
+
+        The row is built from JVM-side literals over a one-partition
+        ``range`` (``createDataFrame`` would run a Python worker), so the
+        write adds exactly one part. ``updated_at`` goes through
+        TimestampType's own conversion, so the cached value equals what
+        a read-back returns and latest-wins compares like frames."""
+        ts = T.TimestampType()
+        micros = ts.toInternal(datetime.now(timezone.utc).replace(tzinfo=None))
+        cols = [
+            F.lit(getattr(state, f.name)).cast(f.dataType).alias(f.name)
+            for f in STATE_SCHEMA.fields
+            if f.name != "updated_at"
+        ]
+        cols.append(F.timestamp_micros(F.lit(micros)).alias("updated_at"))
+        row = self.spark.range(0, 1, 1, 1).select(*cols)
+        with self._lock:
+            before = self._parts
+            row.write.mode("append").parquet(self.path)
+            parts = self._list_parts()
+            if before is None or not before < parts or len(parts - before) != 1:
+                return  # another writer's part too: the next read reloads
+            updated_at = ts.fromInternal(micros)
+            held = self._latest.get(state.table_name)
+            if held is None or updated_at >= held[0]:
+                self._latest[state.table_name] = (updated_at, replace(state))
+            self._parts = parts
 
     def status(self, limit: int = 10):
         """`--mode status` inspection: most recent commits first
         (clickhouse/clickhouse_to_bytehouse.py:205-224)."""
         return self.read_all().orderBy(F.desc("updated_at")).limit(limit)
-
-
-def new_run_id() -> str:
-    return uuid.uuid4().hex[:12]

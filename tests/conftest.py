@@ -23,3 +23,28 @@ def spark():
     s = get_spark("tests", cpus=8)
     s.sparkContext.setLogLevel("ERROR")
     return s
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` runs the block under a job group of
+    its own; afterwards ``jobs`` lists the Spark jobs the block ran, as
+    read from the status tracker."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def run():
+        group = f"spark-jobs-{uuid.uuid4().hex[:8]}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -265,7 +265,9 @@ def test_es_search_after_sync_survives_chaos(seed, spark, tmp_path):
     With reset_prob=0.08 and a 3-retry budget, a slice fails only on
     ~4 consecutive resets (p ~ 4e-5) — rounds effectively always
     complete, and the no-loss / convergence invariants hold
-    regardless."""
+    regardless. Rounds that complete leave nothing to re-drain, and an
+    idle round sends only its one-request probe, so the documents
+    arrive in four batches: each batch is drained under chaos."""
     from es_to_clickhouse_spark.sink import WarehouseTarget
     from es_to_clickhouse_spark.sources.es import (
         SearchAfterSession,
@@ -282,7 +284,8 @@ def test_es_search_after_sync_survives_chaos(seed, spark, tmp_path):
     by_time = {d["created_at"]: d["id"] for d in docs}
     mapping = {"id": {"type": "long"}, "created_at": {"type": "date"}}
     chaos = Chaos(seed, reset_prob=0.08, slow_prob=0.05, slow_s=0.01)
-    srv, host = serve_index(docs, index="ev", mapping=mapping, chaos=chaos)
+    served = docs[:60]  # the fixture serves this list as it grows
+    srv, host = serve_index(served, index="ev", mapping=mapping, chaos=chaos)
     try:
         sess = SearchAfterSession(host=host, size=20, backoff_s=0.01)
         target = WarehouseTarget(spark, str(tmp_path / "wh"))
@@ -300,6 +303,7 @@ def test_es_search_after_sync_survives_chaos(seed, spark, tmp_path):
             mode, n, wm = sync_incremental_es_http(
                 spark, sess, target, state, "ev", slices=4
             )
+            served.extend(docs[len(served):len(served) + 60])
             got = warehouse_ids()
             if wm:
                 missing = {

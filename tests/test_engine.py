@@ -536,6 +536,50 @@ def test_incremental_neardup_store_across_rounds(spark, tmp_path):
     assert (rep3.rows, rep3.neardup_dropped) == (0, 0)
 
 
+def test_neardup_screen_keeps_update_of_same_id(spark, tmp_path):
+    """A document re-sent under its own id with a later updated_at is an
+    update: the screen must not match it against the signature the same
+    id stored on the earlier round (that dropped the update while the
+    update-time watermark advanced past it, so it was lost for good)."""
+    from es_to_clickhouse_spark.operators.dedup import PersistedNearDupStore
+
+    source = tmp_path / "source"
+    os.makedirs(source)
+    text = "alpha bravo charlie delta echo foxtrot"
+
+    def write(rows, mode="append"):
+        spark.createDataFrame(
+            rows,
+            "doc_id long, created_at string, updated_at string, title string, text string",
+        ).withColumn("created_at", F.col("created_at").cast("timestamp")).withColumn(
+            "updated_at", F.col("updated_at").cast("timestamp")
+        ).write.mode(mode).parquet(str(source / "posts.parquet"))
+
+    write(
+        [
+            (1, "2024-01-01 00:00:00", "2024-01-01 00:00:00", "old", text),
+            (2, "2024-01-02 00:00:00", "2024-01-02 00:00:00", "b",
+             "golf hotel india juliett kilo lima"),
+        ],
+        mode="overwrite",
+    )
+    engine = SyncEngine(
+        spark=spark,
+        catalog=ParquetCatalog(spark, str(source)),
+        target=WarehouseTarget(spark, str(tmp_path / "wh")),
+        state=StateStore(spark, str(tmp_path / "wh")),
+        id_field="doc_id",
+        neardup=PersistedNearDupStore(str(tmp_path / "nd"), "doc_id", "text"),
+    )
+    engine.sync_full()
+    # same id, same text, a changed non-text field and a later updated_at
+    write([(1, "2024-01-01 00:00:00", "2024-01-05 00:00:00", "new", text)])
+    rep = engine.sync_incremental_once()[0]
+    assert (rep.rows, rep.neardup_dropped) == (1, 0)
+    titles = {r.doc_id: r.title for r in engine.target.read("posts").collect()}
+    assert titles == {1: "new", 2: "b"}
+
+
 def test_neardup_store_append_runs_after_sink_and_state(spark, tmp_path):
     """Ordering pin (ADVICE r12, high): the near-dup store append must
     run AFTER the sink append and the state commit, in both ingest

@@ -321,6 +321,53 @@ def test_sync_incremental_es_http_rounds(spark, tmp_path):
         srv.shutdown()
 
 
+def test_sync_es_http_idle_round_is_one_probe_and_no_spark_job(
+    spark, tmp_path, spark_jobs, monkeypatch
+):
+    """An idle incremental round asks the index once (a size-1 search
+    carrying the round's own ranged query) and launches no Spark job;
+    an active round still drains; a failing probe falls through to the
+    drain instead of skipping the round."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.sources import es
+    from es_to_clickhouse_spark.state import StateStore
+
+    docs = [
+        {"_id": "1", "id": 1, "name": "a", "created_at": "2024-05-01 10:00:00"},
+    ]
+    srv, host, log = _es_sync_parts(tmp_path, docs)
+    try:
+        sess = ScrollSession(host=host, size=500)
+        target = WarehouseTarget(spark, str(tmp_path / "wh"))
+        state = StateStore(spark, str(tmp_path / "wh"))
+
+        def round_():
+            return es.sync_incremental_es_http(
+                spark, sess, target, state, "ev", slices=2
+            )
+
+        assert round_()[:2] == ("full", 1)
+        del log[:]
+        with spark_jobs() as jobs:
+            assert round_() == ("incremental", 0, "2024-05-01 10:00:00")
+        assert jobs == []
+        searches = [r for r in log if r["path"].endswith("_search")]
+        assert [r["body"]["size"] for r in searches] == [1]
+        assert "range" in str(searches[0]["body"]["query"])
+
+        docs.append(
+            {"_id": "2", "id": 2, "name": "b", "created_at": "2024-05-02 10:00:00"}
+        )
+
+        def broken(*a, **k):
+            raise OSError("probe lost")
+
+        monkeypatch.setattr(es, "search_hit", broken)
+        assert round_() == ("incremental", 1, "2024-05-02 10:00:00")
+    finally:
+        srv.shutdown()
+
+
 def test_sync_es_http_no_time_field_holds_after_bootstrap(spark, tmp_path):
     """ADVICE r9: an index with NO detectable time field gets exactly
     ONE full bootstrap; later rounds hold (skipped) instead of

@@ -2321,6 +2321,7 @@ def test_embedding_neardup_prefix_bound_prunes_exactly(spark):
     fires (most cross pairs sit far below threshold)."""
     import math
     import random
+    from decimal import ROUND_HALF_UP, Decimal
 
     from pyspark.sql import functions as F
 
@@ -2370,7 +2371,13 @@ def test_embedding_neardup_prefix_bound_prunes_exactly(spark):
                 dp += p * q
             na = math.sqrt(sum(t * t for t in a))
             nb = math.sqrt(sum(t * t for t in b))
-            c = round(dp / (na * nb), 4)
+            # F.round is HALF_UP on the double's decimal form; Python's
+            # round() is HALF_EVEN and would split a .xxxx5 tie
+            c = float(
+                Decimal(repr(dp / (na * nb))).quantize(
+                    Decimal("0.0001"), rounding=ROUND_HALF_UP
+                )
+            )
             if c >= 0.9:
                 exp.append((ids[x], ids[y], c))
     assert got == sorted(exp)

@@ -267,3 +267,119 @@ def test_compact_many_small_parts(spark, tmp_path):
         spark.createDataFrame([("9", "new")], "_id string, payload string"),
     )
     assert wh.read("logs", dedup=True).count() == 5
+
+
+def _parts(path) -> set[str]:
+    return {p.name for p in path.glob("*.parquet")}
+
+
+def test_state_cache_matches_fresh_read_and_one_part_per_commit(spark, tmp_path):
+    """The driver-side cache answers exactly what a fresh store reading
+    the files answers, after every commit of a mixed sequence over three
+    tables, and each commit adds exactly one part."""
+    store = StateStore(spark, str(tmp_path))
+    seq = [
+        SyncState("a", time_field="ts", last_sync_time="2024-01-01"),
+        SyncState("b", last_id="7", last_sync_count=3),
+        SyncState("a", time_field="ts", last_sync_time="2024-01-02",
+                  update_time_field="u", last_update_time="2024-01-03"),
+        SyncState("c", source_name="src.c"),
+        SyncState("b", last_id="9"),
+        SyncState("a", time_field="ts", last_sync_time="2024-01-04"),
+    ]
+    parts = _parts(tmp_path / "_sync_state")
+    for st in seq:
+        store.commit(st)
+        now = _parts(tmp_path / "_sync_state")
+        assert len(now - parts) == 1 and parts < now
+        parts = now
+        fresh = StateStore(spark, str(tmp_path))
+        for t in ("a", "b", "c", "missing"):
+            assert store.get(t) == fresh.get(t)
+            assert store.has_synced_before(t) == fresh.has_synced_before(t)
+    assert store.get("a").last_sync_time == "2024-01-04"
+    assert store.read_all().count() == len(seq)
+
+
+def test_state_cache_sees_other_writers_and_restored_snapshots(spark, tmp_path):
+    """A commit by a second instance on the same path, and an older
+    snapshot of the directory copied back in, both reach the first
+    instance's next get."""
+    import shutil
+
+    first = StateStore(spark, str(tmp_path))
+    first.commit(SyncState("t", last_sync_time="2024-01-01"))
+    assert first.get("t").last_sync_time == "2024-01-01"
+    snap = tmp_path / "snap"
+    shutil.copytree(tmp_path / "_sync_state", snap)
+    StateStore(spark, str(tmp_path)).commit(SyncState("t", last_sync_time="2024-01-02"))
+    assert first.get("t").last_sync_time == "2024-01-02"
+    # a commit on top of another writer's unseen part must not take
+    # that part for its own
+    StateStore(spark, str(tmp_path)).commit(SyncState("v", last_sync_time="2024-03-01"))
+    first.commit(SyncState("u", last_sync_time="2024-02-01"))
+    assert first.get("v").last_sync_time == "2024-03-01"
+    assert first.get("u").last_sync_time == "2024-02-01"
+    shutil.rmtree(tmp_path / "_sync_state")
+    shutil.copytree(snap, tmp_path / "_sync_state")
+    assert first.get("t").last_sync_time == "2024-01-01"
+    assert first.get("u") is None
+
+
+def test_state_warm_get_runs_no_spark_job(spark, tmp_path, spark_jobs):
+    store = StateStore(spark, str(tmp_path))
+    with spark_jobs() as jobs:
+        assert store.get("t") is None  # an empty store needs no read
+    assert jobs == []
+    store.commit(SyncState("t", last_sync_time="2024-01-01"))
+    with spark_jobs() as jobs:
+        for _ in range(3):
+            assert store.get("t").last_sync_time == "2024-01-01"
+            assert store.has_synced_before("t")
+    assert jobs == []
+    # a cold instance pays one read, then is warm
+    cold = StateStore(spark, str(tmp_path))
+    with spark_jobs() as jobs:
+        cold.get("t")
+    assert jobs
+    with spark_jobs() as jobs:
+        cold.get("t")
+    assert jobs == []
+
+
+def test_state_cache_concurrent_commits_on_one_store(spark, tmp_path):
+    """Streaming foreachBatch threads share one store: concurrent
+    commits and gets from more threads than cores leave the cache equal
+    to a fresh read of the files, with every table's last commit."""
+    import sys
+    import threading
+
+    store = StateStore(spark, str(tmp_path))
+    n_threads, rounds = 8, 2
+    errors: list[BaseException] = []
+
+    def work(i: int) -> None:
+        try:
+            for r in range(rounds):
+                store.commit(SyncState(f"t{i}", last_sync_time=f"2024-01-0{r + 1}"))
+                store.get(f"t{(i + 1) % n_threads}")
+        except BaseException as e:  # reported by the main thread below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    fresh = StateStore(spark, str(tmp_path))
+    for i in range(n_threads):
+        assert store.get(f"t{i}") == fresh.get(f"t{i}")
+        assert store.get(f"t{i}").last_sync_time == f"2024-01-0{rounds}"
+    assert len(list((tmp_path / "_sync_state").glob("*.parquet"))) == n_threads * rounds
