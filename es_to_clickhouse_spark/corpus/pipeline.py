@@ -590,9 +590,9 @@ def d14_semantic_dedup(spark, sf_dir):
     # threshold 0.4 is calibrated to the synthetic corpus (its max pairwise
     # cosine is ~0.51 — no planted exact dups); on a real embedding model
     # SemDeDup's 0.9+ applies, and the threshold is just this parameter.
-    # Block hint = the cell count, so the pair stage's salting adapts:
-    # many cells -> no payload replication through the pair exchange
-    # (operators/dedup.py adaptive_salts — the r13 dim-768 disk autopsy).
+    # Block hint = the cell count; the pair stage salts each cell by its
+    # observed population instead (operators/dedup.py sized_block_salts),
+    # so many small cells -> no payload replication through the exchange.
     k_cells = max(8, n_emb // 256)
     pairs = embedding_neardup_pairs(
         base, "vec_id", "embedding", "cent_id", threshold=0.4,

@@ -21,8 +21,9 @@ from __future__ import annotations
 
 import logging
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -83,6 +84,95 @@ def _mono_id(new: str | None, old: str | None) -> str | None:
         return new if new > old else old
 
 
+def land_batch(
+    state,
+    base: SyncState,
+    batch: DataFrame,
+    append,
+    *,
+    time_col: str | None = None,
+    update_col: str | None = None,
+    id_col: str | None = None,
+    neardup=None,
+) -> tuple[int, int, SyncState | None]:
+    """Land one sync batch: the one sink → state → store path every
+    sync round (engine full/incremental, the ES/CH/Mongo wire rounds,
+    the streaming micro-batch) goes through. Returns ``(landed,
+    dropped, committed)``; ``committed`` is None for an empty batch.
+
+    - An empty batch touches neither sink nor state (a zero-row append
+      would leave an empty parquet part per idle round).
+    - ``append(df)`` is the caller's sink call. On an unscreened batch
+      the count and the maxima of ``time_col``/``update_col``/``id_col``
+      ride it through an ``Observation``, so landing is one job.
+    - With a ``neardup`` store whose id and text columns the batch
+      carries, the batch is screened first and only the novel rows are
+      appended; the watermarks still come from the FULL batch (one agg
+      next to the count of the screen's matches), so a batch whose
+      newest rows are all near-dups advances them and commits without
+      any sink append. The screen, the agg and the appends share one
+      materialized batch. A first landing (``base`` holds no mark) may
+      be a whole source table, so it is persisted ``DISK_ONLY``: unlike
+      ``localCheckpoint`` that keeps lineage, so blocks lost with an
+      executor recompute from the source, and it never competes with
+      execution memory. A later round's batch is ``localCheckpoint``-ed:
+      with its lineage cut, the screen and the store append run 4 fewer
+      jobs per active round of the repo benchmark than over a persisted
+      batch.
+    - Every observed maximum merges monotonically into ``base``'s marks
+      (a late batch lowers no mark); a mark whose column is not passed
+      is committed verbatim from ``base``.
+    - Order: sink, then state, then store. A crash between sink and
+      store merely re-appends signatures on replay (the screen's
+      store-side dedup absorbs them); store-first would make the
+      replayed batch screen as a near-dup of its own failed attempt and
+      drop it while the watermark advances.
+    """
+    if batch.isEmpty():
+        return 0, 0, None
+    marks = {"max_t": time_col, "max_u": update_col, "max_id": id_col}
+    metrics = [F.count(F.lit(1)).alias("n")] + [
+        F.max(c).cast("string").alias(k) for k, c in marks.items() if c
+    ]
+    screened = (
+        neardup is not None
+        and getattr(neardup, "id_col", None) in batch.columns
+        and neardup.text_col in batch.columns
+    )
+    if screened:
+        if base.last_sync_time or base.last_update_time or base.last_id:
+            batch = batch.localCheckpoint()
+        else:
+            batch = batch.persist(StorageLevel.DISK_ONLY)
+    try:
+        if screened:
+            novel, matched = neardup.screen_split(batch)
+            dropped = matched.count()
+            seen = batch.agg(*metrics).first().asDict()
+            landed = seen["n"] - dropped
+            if landed:
+                append(novel)
+        else:
+            obs = Observation()
+            append(batch.observe(obs, *metrics))
+            seen = obs.get
+            dropped, landed = 0, seen["n"]
+        committed = replace(
+            base,
+            last_sync_time=_mono_time(seen.get("max_t"), base.last_sync_time),
+            last_update_time=_mono_time(seen.get("max_u"), base.last_update_time),
+            last_id=_mono_id(seen.get("max_id"), base.last_id),
+            last_sync_count=landed,
+        )
+        state.commit(committed)
+        if screened and landed:
+            neardup.append(novel)
+    finally:
+        if screened:
+            batch.unpersist()
+    return landed, dropped, committed
+
+
 @dataclass
 class SyncEngine:
     """One engine instance = one (source catalog → warehouse target) pipeline."""
@@ -129,108 +219,62 @@ class SyncEngine:
     def list_tables(self, pattern: str | None = None) -> list[str]:
         return [t.name for t in self.catalog.list_tables(pattern)]
 
+    def _id_source(self, cols: list[str]) -> str | None:
+        """The column whose max is the id watermark: the NATIVE id
+        column when known, so a numeric id's watermark is its numeric
+        max, not a string max ('99' > '100' lexicographically)."""
+        if self.id_field and self.id_field in cols:
+            return self.id_field
+        return ID_COL if ID_COL in cols else None
+
+    def _land(
+        self, t0: float, source: str, mode: str, base: SyncState, batch: DataFrame,
+        **cols,
+    ) -> SyncReport:
+        """:func:`land_batch` into this engine's target, state and
+        near-dup store; reports the round."""
+        table = base.table_name
+        rows, dropped, st = land_batch(
+            self.state, base, batch, lambda df: self.target.append(table, df),
+            neardup=self.neardup, **cols,
+        )
+        rep = SyncReport(
+            source,
+            mode,
+            rows,
+            time.time() - t0,
+            (st or base).last_sync_time,
+            neardup_dropped=dropped,
+        )
+        self.reporter.table_done(rep.table, rep.rows, rep.seconds)
+        return rep
+
     def sync_full(self, pattern: str | None = None) -> list[SyncReport]:
-        """Full sync of every matching table (§3.1)."""
+        """Full sync of every matching table (§3.1). Count and
+        watermarks are observed during the write (the reference
+        re-queries the target after loading, es/es_to_bytehouse.py:
+        1115-1131, a second full scan). With a near-dup store the full
+        sync seeds it. An empty table lands and commits nothing, so
+        auto mode retries it next round."""
         reports = []
         for t in self.catalog.list_tables(pattern):
             t0 = time.time()
-            target_name = sanitize_table_name(t.name, self.dialect)
             df = self._transform(self.catalog.read(t.name))
             cols = df.columns
-            time_field = detect_time_field(cols)
-            update_field = detect_update_time_field(cols)
-            # Watermarks + count observed DURING the write (Observation
-            # rides the write job) — the reference re-queries the target
-            # after loading (es/es_to_bytehouse.py:1115-1131), which at
-            # 100 TB would be a second full scan; here the sync is ONE pass.
-            obs = Observation(f"sync_full:{target_name}")
-            metrics = [F.count(F.lit(1)).alias("n")]
-            if time_field:
-                metrics.append(F.max(time_field).cast("string").alias("max_t"))
-            if update_field:
-                metrics.append(F.max(update_field).cast("string").alias("max_u"))
-            # keyset seed: max over the NATIVE id column when known, so a
-            # numeric id's watermark is its numeric max, not a string max
-            # ('99' > '100' lexicographically — ADVICE incremental.py:85)
-            id_src = (
-                self.id_field
-                if self.id_field and self.id_field in cols
-                else (ID_COL if ID_COL in cols else None)
-            )
-            if id_src:
-                metrics.append(F.max(id_src).cast("string").alias("max_id"))
-            nd = self.neardup
-            nd_dropped = 0
-            if (
-                nd is not None
-                and getattr(nd, "id_col", None) in cols
-                and nd.text_col in cols
-            ):
-                # full sync SEEDS the near-dup store: screen (virgin
-                # store → everything is novel), drop in-history dups on
-                # a re-run, append the kept rows' signatures — the
-                # incremental rounds then screen against these without
-                # ever rescanning this text. Store append comes LAST
-                # (after the sink append below and the state commit at
-                # the bottom): a crash between sink and store merely
-                # re-appends signatures on replay (store-side dedup
-                # absorbs it); the old order silently dropped the
-                # replayed batch as a near-dup of its own failed
-                # attempt (ADVICE r12, high).
-                # persist, not localCheckpoint, for the FULL-sync seed:
-                # this materializes the ENTIRE source table, and
-                # localCheckpoint's truncated lineage on executor
-                # storage makes an executor loss mid-round unrecoverable
-                # at that scale (ADVICE r12). DISK_ONLY keeps lineage
-                # (lost blocks recompute from the source) and never
-                # competes with execution memory.
-                from pyspark import StorageLevel
-
-                df_all = nd_seed_df = df.persist(StorageLevel.DISK_ONLY)
-                novel, matched = nd.screen_split(df_all)
-                nd_dropped = matched.count()
-                observed = df_all.agg(*metrics).first().asDict()
-                rows_kept = observed["n"] - nd_dropped
-                nd_novel = None
-                if rows_kept > 0:
-                    self.target.append(target_name, novel)
-                    nd_novel = novel
-                observed["n"] = rows_kept
-            else:
-                nd_novel = nd_seed_df = None
-                self.target.append(target_name, df.observe(obs, *metrics))
-                observed = obs.get
-            wm = observed.get("max_t")
-            wm_u = observed.get("max_u")
-            rows = observed["n"]
-            st = SyncState(
-                table_name=target_name,
+            base = SyncState(
+                table_name=sanitize_table_name(t.name, self.dialect),
                 source_name=t.name,
-                time_field=time_field,
-                update_time_field=update_field,
-                last_sync_time=str(wm) if wm is not None else None,
-                last_update_time=str(wm_u) if wm_u is not None else None,
-                last_id=str(observed["max_id"])
-                if observed.get("max_id") is not None
-                else None,
-                last_sync_count=rows,
+                time_field=detect_time_field(cols),
+                update_time_field=detect_update_time_field(cols),
             )
-            self.state.commit(st)
-            if nd_novel is not None:
-                # store append LAST — see the ordering comment above
-                nd.append(nd_novel)
-            if nd_seed_df is not None:
-                nd_seed_df.unpersist()
-            rep = SyncReport(
-                t.name,
-                "full",
-                rows,
-                time.time() - t0,
-                st.last_sync_time,
-                neardup_dropped=nd_dropped,
+            reports.append(
+                self._land(
+                    t0, t.name, "full", base, df,
+                    time_col=base.time_field,
+                    update_col=base.update_time_field,
+                    id_col=self._id_source(cols),
+                )
             )
-            self.reporter.table_done(rep.table, rep.rows, rep.seconds)
-            reports.append(rep)
         return reports
 
     def sync_incremental_once(
@@ -266,7 +310,7 @@ class SyncEngine:
                 continue
             t0 = time.time()
             df = self._transform(self.catalog.read(t.name))
-            keyset_col = None
+            id_col = self._id_source(df.columns) if st.last_id else None
             if st.time_field and st.last_sync_time:
                 pred = watermark_predicate(
                     st.time_field,
@@ -278,131 +322,24 @@ class SyncEngine:
                 # compare on the NATIVE id column when known (numeric ids
                 # break under string compare — ADVICE incremental.py:85);
                 # the stored string watermark is cast back to its type
-                keyset_col = (
-                    self.id_field
-                    if self.id_field and self.id_field in df.columns
-                    else ID_COL
-                )
-                pred = keyset_predicate(
-                    keyset_col, st.last_id, df.schema[keyset_col].dataType
-                )
+                id_col = id_col or ID_COL
+                pred = keyset_predicate(id_col, st.last_id, df.schema[id_col].dataType)
             else:
                 log.warning("%s: state lacks watermark fields; skipping", t.name)
                 continue
-            # ONE job per round: count + watermarks ride the append via
-            # Observation (same pattern as sync_full). The old shape — a
-            # batch_watermarks() aggregate job, then the append re-scanning
-            # the source — doubled the scan cost AND could commit a
-            # watermark that missed rows arriving between the two jobs
-            # (permanent re-fetch duplicates on tables without _id).
-            batch = df.where(pred)
-            # Idle-round no-op (es/es_to_bytehouse.py:996-1004: zero rows
-            # moved → nothing inserted, state untouched). Without this
-            # probe every idle round appends an EMPTY parquet part — at
-            # the reference's 60 s interval that is ~1440 junk files per
-            # table per day, a scan-degradation scale-killer for any
-            # long-running continuous deployment. The probe is a
-            # limit(1) job: on active rounds it early-exits at the first
-            # matching row (epsilon cost before the real append scan);
-            # on idle rounds it replaces the append's own full scan, so
-            # no round ever scans the source twice in full.
-            if batch.isEmpty():
-                rep = SyncReport(t.name, "incremental", 0, time.time() - t0, st.last_sync_time)
-                self.reporter.table_done(rep.table, rep.rows, rep.seconds)
-                reports.append(rep)
-                continue
-            metrics = [F.count(F.lit(1)).alias("n")]
-            if st.time_field:
-                metrics.append(F.max(st.time_field).cast("string").alias("max_t"))
-            if st.update_time_field:
-                metrics.append(
-                    F.max(st.update_time_field).cast("string").alias("max_u")
+            # One source scan per round: land_batch's limit(1) probe
+            # ends an idle round (es/es_to_bytehouse.py:996-1004: zero
+            # rows moved → nothing inserted, state untouched), and an
+            # active round's count and watermarks ride its append.
+            reports.append(
+                self._land(
+                    t0, t.name, "incremental", replace(st, source_name=t.name),
+                    df.where(pred),
+                    time_col=st.time_field,
+                    update_col=st.update_time_field,
+                    id_col=id_col,
                 )
-            id_src = keyset_col
-            if id_src is None and st.last_id:
-                # time-watermark path still advances the id watermark
-                id_src = (
-                    self.id_field
-                    if self.id_field and self.id_field in df.columns
-                    else (ID_COL if ID_COL in df.columns else None)
-                )
-            if id_src:
-                metrics.append(F.max(id_src).cast("string").alias("max_id"))
-            nd = self.neardup
-            nd_dropped = 0
-            nd_novel = None
-            if (
-                nd is not None
-                and getattr(nd, "id_col", None) in batch.columns
-                and nd.text_col in batch.columns
-            ):
-                # Ingest-time near-dup screen. One source scan: the
-                # checkpoint materializes the batch; the screen, the
-                # watermark agg, the sink append and the store append
-                # all read it from executor storage. The STORE append
-                # runs after the state commit below — a crash between
-                # sink and store re-appends signatures on replay
-                # (harmless, store-side dedup) instead of silently
-                # dropping the replayed batch as a near-dup of its own
-                # failed attempt (ADVICE r12, high).
-                batch_all = batch.localCheckpoint()
-                novel, matched = nd.screen_split(batch_all)
-                nd_dropped = matched.count()
-                # Watermarks come from the FULL batch: a round whose
-                # newest rows are all near-dups must still advance the
-                # watermark, else those rows re-fetch (and re-screen)
-                # every round forever.
-                observed = batch_all.agg(*metrics).first().asDict()
-                rows = observed["n"] - nd_dropped
-                if rows > 0:
-                    # all-dup rounds skip the append entirely — same
-                    # junk-empty-part concern as the idle-round probe
-                    self.target.append(target_name, novel)
-                    nd_novel = novel
-            else:
-                obs = Observation(f"sync_incremental:{target_name}")
-                self.target.append(
-                    target_name, batch.observe(obs, *metrics)
-                )
-                observed = obs.get
-                rows = observed["n"]
-            max_time = observed.get("max_t")
-            if rows > 0 or nd_dropped > 0:
-                # commit only when rows moved (es/es_to_bytehouse.py:996-1004),
-                # and merge every watermark MONOTONICALLY: a late-update
-                # batch's maxima can sit below the stored marks
-                self.state.commit(
-                    SyncState(
-                        table_name=target_name,
-                        source_name=t.name,
-                        time_field=st.time_field,
-                        update_time_field=st.update_time_field,
-                        last_sync_time=_mono_time(max_time, st.last_sync_time),
-                        last_update_time=_mono_time(
-                            observed.get("max_u"), st.last_update_time
-                        ),
-                        last_id=_mono_id(
-                            str(observed["max_id"])
-                            if observed.get("max_id") is not None
-                            else None,
-                            st.last_id,
-                        ),
-                        last_sync_count=rows,
-                    )
-                )
-            if nd_novel is not None:
-                # store append LAST — see the ordering comment above
-                nd.append(nd_novel)
-            rep = SyncReport(
-                t.name,
-                "incremental",
-                rows,
-                time.time() - t0,
-                max_time,
-                neardup_dropped=nd_dropped,
             )
-            self.reporter.table_done(rep.table, rep.rows, rep.seconds)
-            reports.append(rep)
         return reports
 
     def sync_continuous(

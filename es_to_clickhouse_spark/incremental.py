@@ -8,15 +8,14 @@ predicates — Catalyst pushes them into the scan (parquet row-group pruning
 / JDBC WHERE / connector pushdown), so the same declarative filter is the
 pushdown.
 
-Watermarks advance via ``max()`` aggregates over the batch (the Spark
-version of the reference's in-flight running max, es/es_to_bytehouse.py:909-919).
+Watermarks advance via ``max()`` aggregates observed on the batch's sink
+append (``engine.land_batch``; the Spark version of the reference's
+in-flight running max, es/es_to_bytehouse.py:909-919).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: time-field autodetection candidates (es/es_to_bytehouse.py:156)
@@ -93,37 +92,3 @@ def keyset_predicate(id_field: str, last_id, dtype=None) -> Column:
     if dtype is not None:
         lit = lit.cast(dtype)
     return F.col(id_field) > lit
-
-
-@dataclass
-class BatchWatermarks:
-    rows: int
-    max_time: str | None
-    max_update: str | None
-    max_id: str | None
-
-
-def batch_watermarks(
-    df: DataFrame,
-    time_field: str | None,
-    update_field: str | None = None,
-    id_field: str | None = None,
-) -> BatchWatermarks:
-    """One pass over the batch: count + max(t) + max(u) + max(id)
-    (replaces the reference's per-row running max, es/es_to_bytehouse.py:909-919).
-    A single partial-aggregated job — no collect of data rows."""
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if time_field:
-        aggs.append(F.max(time_field).cast("string").alias("max_t"))
-    if update_field:
-        aggs.append(F.max(update_field).cast("string").alias("max_u"))
-    if id_field:
-        aggs.append(F.max(id_field).cast("string").alias("max_id"))
-    row = df.agg(*aggs).collect()[0]
-    d = row.asDict()
-    return BatchWatermarks(
-        rows=d["n"],
-        max_time=d.get("max_t"),
-        max_update=d.get("max_u"),
-        max_id=d.get("max_id"),
-    )

@@ -377,33 +377,6 @@ def simhash16(text: Column) -> Column:
     return out
 
 
-def adaptive_salts(n_blocks: int, n_tasks: int, cap: int = 16) -> int:
-    """Salt count for :func:`salted_block_pairs` from the BLOCK COUNT:
-    salting exists to split few-large-block skew across tasks, and its
-    price is ~(n_salts+1)/2 x payload replication through the pair
-    join's exchange. With many blocks the join is already parallel and
-    the replication is pure waste — measured r13: d18 at 2M x dim-768
-    has ~62k (label x cell) blocks of ~32 rows, and the fixed 16-salt
-    replication pushed ~100 GB of vector bytes through the exchange
-    (disk overflow); one salt moves 12 GB and the block count alone
-    feeds all 32 cores. Rule: no salt once blocks >= 4x tasks; below
-    that, enough salts that block_count * n_salts^2/2 spreads ~4x the
-    task count (pair-key population ~ B * s(s+1)/2).
-
-    SUPERSEDED for the embedding pair stage (r15): a COUNT-keyed rule
-    is blind to per-block SIZE skew — the r14 realdim autopsy measured
-    d14's first decade at 41.8x because low-rank geometry concentrates
-    vectors into a few giant cells that a many-cells-no-salt verdict
-    leaves on single straggler tasks. :func:`sized_block_salts` salts
-    each block by its OBSERVED population instead; this function
-    remains for count-only callers and its pinned tests."""
-    import math
-
-    if n_blocks >= 4 * n_tasks:
-        return 1
-    return min(cap, max(2, math.ceil(math.sqrt(4 * n_tasks / max(n_blocks, 1)))))
-
-
 #: per-salt-bucket row target for sized_block_salts: a block at or
 #: under the target keeps one salt (zero replication); an oversized
 #: block gets ceil(population/target) salts, so every salt-pair key
@@ -593,7 +566,7 @@ def embedding_neardup_pairs(
     )
     # SIZE-AWARE salting (r15, guide §2.5): each block is salted by its
     # OBSERVED population (sized_block_salts), replacing the r13
-    # count-keyed rule (adaptive_salts) that was blind to per-block
+    # rule keyed on the block COUNT, which was blind to per-block
     # size skew — the r14 realdim autopsy: low-rank geometry piles
     # vectors into a few giant IVF cells, the many-cells verdict chose
     # no salt, and d14's quadratic stage ran on single straggler tasks
@@ -987,10 +960,10 @@ class PersistedNearDupStore:
         callers should pass a checkpointed/cached batch to keep the
         round at one source scan.
 
-        This is the TRANSACTIONAL half of :meth:`ingest`: an ingest
-        pipeline with a downstream sink must call this first, land the
-        novel rows on the sink (and commit its state), and only THEN
-        :meth:`append` the novel signatures. Appending before the sink
+        An ingest pipeline with a downstream sink calls this first,
+        lands the novel rows on the sink (and commits its state), and
+        only THEN appends the novel signatures (:meth:`append`) — the
+        order ``engine.land_batch`` keeps. Appending before the sink
         commit inverts the failure mode: a crash between store append
         and sink append makes the replayed batch screen as a near-dup
         of its own failed attempt — dropped from the sink while the
@@ -1096,18 +1069,6 @@ class PersistedNearDupStore:
             fsio.delete(spark, old)
             out.append(n)
         return tuple(out)
-
-    def ingest(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """One STANDALONE append round: screen → split → append the
-        novel signatures. Returns (novel, matched). Only for callers
-        with no downstream sink to keep consistent with the store —
-        sinked ingest paths (SyncEngine/StreamingSync) use
-        :meth:`screen_split` + post-commit :meth:`append` so a crash
-        between the two can never silently drop the replayed batch
-        (see screen_split's docstring)."""
-        novel, matched = self.screen_split(batch)
-        self.append(novel)
-        return novel, matched
 
 
 def substring_dedup_profile(

@@ -486,94 +486,6 @@ def ivf_assign_auto(
     )
 
 
-def refined_centroids(
-    df: DataFrame,
-    centroids: DataFrame,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    sample_per_cell: int = 32,
-) -> DataFrame:
-    """1-3 Lloyd iterations over sampled centroids, at scale-safe cost
-    (judge r13 #1's second primitive): hash-sampled data points make a
-    nearly flat argmax landscape; moving each centroid to its cell's
-    mean sharpens the cells, lifting single-cell blocking recall
-    (+0.07..+0.10 per the realdim numpy design study — the multi-probe
-    split in :func:`ivf_assign_probes` is the bigger lever and the two
-    compose).
-
-    Differences from :func:`lloyd_step` (the sim5 oracle-pinned exact
-    single step, unchanged): (a) the E-step assigns a deterministic
-    HASH SAMPLE of ~sample_per_cell * k vectors, not the full corpus —
-    with corpus-scaled k (~n/256) a full dense E-step is the N x k
-    matrix every assign tier exists to avoid; (b) assignment routes
-    through the tier-routed :func:`ivf_assign_auto`; (c) the long-form
-    means are re-packed to (cent_id, cv) arrays so the output drops
-    into any assign/probe entry point. A cell that catches no sample
-    keeps its previous centroid (real Lloyd's empty-cell rule).
-    Deterministic end-to-end: hash cut, argmax tie-breaks, fixed
-    rounding, position-sorted repack.
-
-    Scale shape: per iteration, one bounded sample scan + assign over
-    ~32k rows + a (cell, dim)-keyed partial mean (shuffle carries
-    k*dim rows per partition). The collect_list repack buffers ONE
-    row per (cell, dim) group — bounded by k*dim, never by data — so
-    the SortAggregate demotion it costs sorts a centroid-sized frame,
-    not an expanded corpus (the r13 350 GB spill autopsy does not
-    apply)."""
-    from es_to_clickhouse_spark.operators.sketch import hash32
-
-    k, dim = _k_dim(centroids, None, None)
-    n = df.count()
-    if k == 0 or n == 0:
-        return centroids
-    want = min(n, sample_per_cell * k)
-    cut = ((1 << 32) * want) // n
-    sample = df.where(hash32(F.col(id_col), "lloyd") < cut).select(
-        id_col, vec_col
-    ).localCheckpoint(eager=False)
-    for _ in range(iters):
-        assigned = ivf_assign_auto(
-            sample, centroids, id_col, vec_col, round_digits, k=k, dim=dim
-        ).select(id_col, "cent_id")
-        dims = assigned.join(sample, id_col).select(
-            "cent_id", F.posexplode(vec_col).alias("pos", "val")
-        )
-        means = (
-            dims.groupBy("cent_id", "pos")
-            .agg(
-                F.round(F.avg(F.col("val").cast("double")), round_digits)
-                .alias("m")
-            )
-            .groupBy("cent_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("_pm")
-            )
-            .select(
-                "cent_id",
-                F.transform("_pm", lambda s: s["m"]).alias("cv"),
-            )
-        )
-        # empty-cell rule: a centroid whose cell caught no sample keeps
-        # its previous vector (left join, coalesce)
-        centroids = (
-            centroids.select("cent_id", F.col("cv").alias("_old"))
-            .join(means, "cent_id", "left")
-            .select(
-                "cent_id",
-                F.coalesce(
-                    F.col("cv").cast("array<float>"),
-                    F.col("_old").cast("array<float>"),
-                ).alias("cv"),
-            )
-            .localCheckpoint()  # cut the iteration's lineage (CC lesson)
-        )
-    return centroids
-
-
 def ivf_assign_probes(
     df: DataFrame,
     centroids: DataFrame,

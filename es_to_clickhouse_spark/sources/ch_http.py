@@ -653,23 +653,21 @@ def sync_incremental_http(
        start date is forced; neither -> the 1-day bootstrap (P6);
     2. the table reads DISTRIBUTED (``read_table`` with the condition
        pushed into every range query, executor-side fetch), then
-       ``localCheckpoint``s — ONE snapshot feeds the count, the append,
-       and the watermark (the source is not re-read, so the reported n
-       is exactly what was appended);
-    3. rows append to the warehouse target (system columns + schema
-       evolution handled by the sink);
-    4. the watermark advances to ``max(time_column)`` OVER THE APPENDED
-       SNAPSHOT — unlike the reference's source-side advance query
-       (:475-477), a row landing at the source after the snapshot can
-       never be swallowed by the watermark: its time exceeds the
+       ``localCheckpoint``s one snapshot (the source is not re-read, so
+       the reported n is exactly what was appended);
+    3. the snapshot lands through :func:`engine.land_batch` (system
+       columns + schema evolution handled by the sink), whose append
+       also observes ``max(time_column)``. The watermark merges that
+       max monotonically — unlike the reference's source-side advance
+       query (:475-477), a row landing at the source after the snapshot
+       can never be swallowed by the watermark: its time exceeds the
        snapshot max, so the next round picks it up. The one inherent
        strict-greater-watermark gap remains (shared with the
        reference): a late row carrying EXACTLY the snapshot-max
        timestamp is excluded by ``>`` next round.
 
     Returns ``(rows_synced, condition, new_watermark)``."""
-    from pyspark.sql import functions as F
-
+    from es_to_clickhouse_spark.engine import land_batch
     from es_to_clickhouse_spark.state import SyncState
 
     st = state.get(table)
@@ -682,22 +680,17 @@ def sync_incremental_http(
         partition_column=partition_column,
         bounds=bounds,
         num_partitions=num_partitions,
-    ).localCheckpoint()  # one source pass; count/append/watermark share it
-    n = df.count()
-    if n == 0:
-        return 0, cond, last
-    target.append(table, df)
-    max_time = df.agg(
-        F.max(F.col(time_column)).cast("string").alias("m")
-    ).collect()[0]["m"]
-    new_wm = max_time or last
-    state.commit(
+    ).localCheckpoint()  # one source pass
+    n, _, committed = land_batch(
+        state,
         SyncState(
             table_name=table,
             source_name=f"ch_http:{source.database}.{table}",
             time_field=time_column,
-            last_sync_time=new_wm,
-            last_sync_count=n,
-        )
+            last_sync_time=last,
+        ),
+        df,
+        lambda batch: target.append(table, batch),
+        time_col=time_column,
     )
-    return n, cond, new_wm
+    return n, cond, committed.last_sync_time if committed else last

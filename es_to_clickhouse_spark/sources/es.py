@@ -502,15 +502,16 @@ class ScrollSession:
           at-least-once, the resume point never overshoots the data.
 
         Returns ``(rows, max_time, max_update_time)``. The Spark
-        production path computes the same watermarks as one distributed
-        agg (:func:`incremental.batch_watermarks`); this driver-side fold
-        pins the wire-protocol contract on bounded test transcripts.
+        production path observes the same watermarks on its sink append
+        (:func:`engine.land_batch`); this driver-side fold pins the
+        wire-protocol contract on bounded test transcripts.
 
         With ``slice_id``/``slice_max`` the fold drains ONE slice of a
         sliced scroll: each slice's running max is a partial watermark,
         and the global max is the fold of the per-slice maxes (string
         max is associative/commutative — the same partial-aggregation
-        argument that makes batch_watermarks one distributed agg)."""
+        argument that lets the production path compute it as one
+        distributed max)."""
         from es_to_clickhouse_spark.functions import sanitize_field_name
 
         original = original_time_field(time_field, mapping_response)
@@ -1122,18 +1123,17 @@ def sync_incremental_es_http(
        the round as ``("incremental", 0, since)`` with no Spark job;
     2. the index reads DISTRIBUTED (:func:`read_index_http`: N sliced
        scroll contexts drained ON THE EXECUTORS, NDJSON parsed
-       JVM-side), then ``localCheckpoint``s — ONE wire drain feeds the
-       count, the append, and the watermark;
+       JVM-side), then ``localCheckpoint``s the one wire drain;
     3. rows flatten/sanitize (``flatten_es``: ``@timestamp`` →
-       ``timestamp`` value-side, P13) and append to the target;
-    4. the watermark advances to ``max(time_field)`` over the appended
-       snapshot as ONE distributed agg — the per-slice running maxes of
-       the serial fold (drain_http_incremental) collapse into the same
-       associative max, computed where the rows already live.
+       ``timestamp`` value-side, P13) and land through
+       :func:`engine.land_batch`: the append carries the count and
+       ``max(time_field)`` — the per-slice running maxes of the serial
+       fold (drain_http_incremental) collapse into the same
+       associative max — and the watermark merges monotonically; a
+       drain with a failed slice holds the old watermark.
 
     Returns ``(mode, rows, new_watermark)``."""
-    from pyspark.sql import functions as F
-
+    from es_to_clickhouse_spark.engine import land_batch
     from es_to_clickhouse_spark.flatten import flatten_es
     from es_to_clickhouse_spark.incremental import (
         detect_time_field,
@@ -1211,47 +1211,31 @@ def sync_incremental_es_http(
     df = df.localCheckpoint()  # one wire drain materialized here
     _rdd.unpersist()  # transport cache released (poll daemons leak otherwise)
     out = flatten_es(df, stringify=False)
-    n = out.count()
-    if n == 0:
-        return mode, 0, since
     cols = out.columns
     time_field = time_field if time_field in cols else detect_time_field(cols)
     update_field = detect_update_time_field(cols)
-    target.append(index, out)
     # ADVICE r10 (Mongo split twin): if ANY slice died mid-drain, the
-    # appended snapshot's max(time) belongs to the HEALTHY slices and
-    # may overshoot the failed slice's undrained tail — committing it
-    # would lose that tail forever. Append the partial rows (at-least-
-    # once) but HOLD the watermark; the next round re-fetches from the
-    # old one (duplicates possible, loss impossible).
-    aggs = (
-        [F.max(F.col(time_field)).cast("string").alias("max_t")]
-        if time_field and complete
-        else []
-    )
-    if update_field and complete:
-        aggs.append(F.max(F.col(update_field)).cast("string").alias("max_u"))
-    row = out.agg(*aggs).collect()[0] if aggs else None
-    max_t = row["max_t"] if row is not None and time_field else None
-    max_u = row["max_u"] if row is not None and update_field else None
-    # monotone merge (engine._mono_time contract): a late-update batch's
-    # maxima can sit below the stored marks
-    last = st.last_sync_time if st else since
-    new_wm = max_t if max_t and (not last or max_t > last) else last
-    last_u = st.last_update_time if st else None
-    new_u = max_u if max_u and (not last_u or max_u > last_u) else last_u
-    state.commit(
+    # snapshot's max(time) belongs to the HEALTHY slices and may
+    # overshoot the failed slice's undrained tail — committing it would
+    # lose that tail forever. Land the partial rows (at-least-once) but
+    # HOLD the watermarks: no column is observed, so land_batch commits
+    # the old marks and the next round re-fetches from them.
+    n, _, committed = land_batch(
+        state,
         SyncState(
             table_name=index,
             source_name=f"es_http:{index}",
             time_field=time_field,
             update_time_field=update_field,
-            last_sync_time=new_wm,
-            last_update_time=new_u,
-            last_sync_count=n,
-        )
+            last_sync_time=st.last_sync_time if st else since,
+            last_update_time=st.last_update_time if st else None,
+        ),
+        out,
+        lambda batch: target.append(index, batch),
+        time_col=time_field if complete else None,
+        update_col=update_field if complete else None,
     )
-    return mode, n, new_wm
+    return mode, n, committed.last_sync_time if committed else since
 
 
 def original_time_field(

@@ -615,7 +615,8 @@ def sync_incremental_mongo_wire(
     2. the collection drains executor-side (one ordered keyset walk)
        and parses JVM-side from NDJSON;
     3. rows stringify-project (``flatten_mongo`` — the Mongo dialect)
-       and append to the target;
+       and land through :func:`engine.land_batch` (the count rides the
+       append);
     4. the watermark advances along the LONGEST CONTIGUOUS PREFIX of
        fully-completed ranges (:func:`commit_watermark_prefix`): the
        first incomplete range contributes its partial progress (the
@@ -632,6 +633,7 @@ def sync_incremental_mongo_wire(
        append already landed, duplicating rows on retry).
 
     Returns ``(mode, rows, new_last_id)`` — ``new_last_id`` tagged."""
+    from es_to_clickhouse_spark.engine import land_batch
     from es_to_clickhouse_spark.flatten import flatten_mongo
     from es_to_clickhouse_spark.state import SyncState
 
@@ -650,15 +652,15 @@ def sync_incremental_mongo_wire(
         return mode, 0, last
     df = spark.read.json(lines).localCheckpoint()  # one wire drain
     raw.unpersist()  # transport cache released (poll daemons leak otherwise)
-    out = flatten_mongo(df)
-    n = out.count()
-    target.append(collection, out)
-    state.commit(
+    # the prefix watermark is committed as-is: no column is observed
+    n, _, _ = land_batch(
+        state,
         SyncState(
             table_name=collection,
             source_name=f"mongo_wire:{session.database}.{collection}",
             last_id=new_last,
-            last_sync_count=n,
-        )
+        ),
+        flatten_mongo(df),
+        lambda batch: target.append(collection, batch),
     )
     return mode, n, new_last

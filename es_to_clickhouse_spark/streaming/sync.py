@@ -29,8 +29,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from es_to_clickhouse_spark.engine import land_batch
 from es_to_clickhouse_spark.flatten import flatten_es
-from es_to_clickhouse_spark.incremental import batch_watermarks, detect_time_field
+from es_to_clickhouse_spark.incremental import detect_time_field
 from es_to_clickhouse_spark.sink import ID_COL, WarehouseTarget
 from es_to_clickhouse_spark.state import StateStore, SyncState
 
@@ -53,8 +54,8 @@ class StreamingSync:
     #: of SyncEngine.neardup: each micro-batch screens against the
     #: parquet-persisted LSH store, drops verified near-dups from the
     #: sink, appends the novel rows' signatures. State still commits
-    #: the FULL batch's watermark (wm is computed before the screen),
-    #: so all-dup micro-batches cannot stall the stream's progress.
+    #: the FULL batch's watermark (engine.land_batch), so all-dup
+    #: micro-batches cannot stall the stream's progress.
     neardup: object | None = None
     #: compact the near-dup store's append-round small files every N
     #: micro-batches (the streaming twin of SyncEngine.sync_continuous
@@ -67,57 +68,39 @@ class StreamingSync:
     compact_store_every: int | None = None
 
     def _handle_batch(self, table: str, source_name: str, batch: DataFrame, batch_id: int) -> None:
-        """One micro-batch: flatten → append → state commit (the streaming
-        twin of SyncEngine.sync_incremental_once)."""
+        """One micro-batch: flatten, then :func:`engine.land_batch` (the
+        streaming twin of SyncEngine.sync_incremental_once). The
+        watermark merges monotonically into the committed one, so an
+        older micro-batch never lowers it."""
         out = flatten_es(batch, stringify=False)
         if self.id_field and self.id_field in out.columns and ID_COL not in out.columns:
             out = out.withColumn(ID_COL, F.col(self.id_field).cast("string"))
         time_field = detect_time_field(out.columns)
-        wm = batch_watermarks(out, time_field)
-        if wm.rows == 0:
-            return
-        nd = self.neardup
-        nd_novel = None
-        if (
-            nd is not None
-            and getattr(nd, "id_col", None) in out.columns
-            and nd.text_col in out.columns
-        ):
-            # screen_split, NOT ingest: the store append must come
-            # after the sink append + state commit below, else a crash
-            # between store and sink makes the checkpoint-replayed
-            # batch screen as a near-dup of its own failed attempt —
-            # dropped from the sink while the watermark advances,
-            # breaking the effectively-once contract the ch_target
-            # epoch path advertises (ADVICE r12, high). Post-commit
-            # append is replay-safe: a re-appended signature set is
-            # absorbed by screen_against_store's store-side dedup.
-            out, _ = nd.screen_split(out.localCheckpoint())
-            if out.isEmpty():
-                # all near-dups: nothing to append, but the state
-                # commit below still advances the full-batch watermark
-                out = None
-            else:
-                nd_novel = out
-        if out is not None:
-            self.target.append(table, out)
+        prev = self.state.get(table)
+
+        def sink(df: DataFrame) -> None:
+            self.target.append(table, df)
             if self.ch_target is not None:
                 # checkpoint-durable epoch: replayed batch → replayed tokens
-                self.ch_target.append(table, out, epoch=f"{table}:{batch_id}")
-        self.state.commit(
+                self.ch_target.append(table, df, epoch=f"{table}:{batch_id}")
+
+        _, _, committed = land_batch(
+            self.state,
             SyncState(
                 table_name=table,
                 source_name=source_name,
                 time_field=time_field,
-                last_sync_time=wm.max_time,
-                last_sync_count=wm.rows,
-            )
+                last_sync_time=prev.last_sync_time if prev else None,
+            ),
+            out,
+            sink,
+            time_col=time_field,
+            neardup=self.neardup,
         )
-        if nd_novel is not None:
-            # store append LAST — see the ordering comment above
-            nd.append(nd_novel)
+        nd = self.neardup
         if (
-            nd is not None
+            committed is not None
+            and nd is not None
             and self.compact_store_every
             and (batch_id + 1) % self.compact_store_every == 0
             and hasattr(nd, "compact")

@@ -58,6 +58,31 @@ def test_full_sync(pipeline, spark):
     assert st.last_sync_time.startswith("2024-01-03")
 
 
+def test_full_sync_of_empty_table_lands_and_commits_nothing(spark, tmp_path):
+    """An empty source table gets no sink part and no state row, so
+    auto mode full-syncs it again once rows arrive."""
+    source = tmp_path / "source"
+    os.makedirs(source)
+    spark.createDataFrame(
+        [], "event_id long, created_at timestamp, payload string"
+    ).write.parquet(str(source / "logs.parquet"))
+    engine = SyncEngine(
+        spark=spark,
+        catalog=ParquetCatalog(spark, str(source)),
+        target=WarehouseTarget(spark, str(tmp_path / "warehouse")),
+        state=StateStore(spark, str(tmp_path / "warehouse")),
+        id_field="event_id",
+    )
+    [rep] = engine.sync_full()
+    assert (rep.rows, rep.watermark) == (0, None)
+    assert not engine.target.table_exists("logs")
+    assert engine.state.get("logs") is None
+    _append_rows(spark, source, [(1, "2024-01-01 00:00:00", "a")])
+    reps = engine.sync_auto()
+    assert [(r.mode, r.rows) for r in reps] == [("full", 1), ("incremental", 0)]
+    assert engine.state.get("logs").last_sync_time.startswith("2024-01-01")
+
+
 def test_incremental_requires_full_first(pipeline):
     engine, _ = pipeline
     # ES refuses incremental before full (es/es_to_bytehouse.py:968-971)
@@ -279,7 +304,7 @@ def test_numeric_keyset_watermark_not_lexicographic(spark, tmp_path):
 def test_incremental_round_is_single_source_pass(pipeline, spark):
     """The watermark/count observation rides the append job (Observation,
     like sync_full) — one source scan per table per round. The old shape
-    (a separate batch_watermarks aggregate job, then the append
+    (a separate watermark aggregate job, then the append
     re-scanning) fired one extra job; pin the per-round job count so a
     reintroduced double-scan fails here."""
     engine, source = pipeline

@@ -363,7 +363,11 @@ def test_sync_es_http_idle_round_is_one_probe_and_no_spark_job(
             raise OSError("probe lost")
 
         monkeypatch.setattr(es, "search_hit", broken)
-        assert round_() == ("incremental", 1, "2024-05-02 10:00:00")
+        with spark_jobs() as jobs:
+            assert round_() == ("incremental", 1, "2024-05-02 10:00:00")
+        # the active round's drain, landing and commit: 8 jobs when the
+        # count and the watermark agg were jobs of their own
+        assert len(jobs) <= 8
     finally:
         srv.shutdown()
 

@@ -402,6 +402,34 @@ def test_streaming_into_typed_evolved_target(spark, tmp_path):
 
 
 @_retry_transient
+def test_streaming_sync_older_micro_batch_keeps_watermark(spark, tmp_path):
+    """A micro-batch older than the committed watermark must not lower
+    it: a later batch-mode incremental run would otherwise re-fetch
+    rows the sink already holds."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.state import StateStore
+    from es_to_clickhouse_spark.streaming.sync import StreamingSync
+
+    ddl = "_id string, timestamp string, v string"
+    src = str(tmp_path / "src")
+    wh = str(tmp_path / "wh")
+    sync = StreamingSync(spark, WarehouseTarget(spark, wh), StateStore(spark, wh))
+
+    def micro_batch(row):
+        df = spark.createDataFrame([row], ddl)
+        df.write.mode("append").parquet(src)
+        sync.file_stream(
+            src, "tbl", df.schema, str(tmp_path / "ckpt"),
+            trigger={"availableNow": True},
+        ).awaitTermination(120)
+
+    micro_batch(("1", "2024-01-05T00:00:00", "new"))
+    micro_batch(("2", "2024-01-01T00:00:00", "late"))
+    assert {r._id for r in sync.target.read("tbl").collect()} == {"1", "2"}
+    assert sync.state.get("tbl").last_sync_time == "2024-01-05T00:00:00"
+
+
+@_retry_transient
 def test_streaming_funnel_matches_batch_windowfunnel(spark, tmp_path):
     """funnel_stream across 3 time-ordered micro-batches ends at exactly
     b6_window_funnel's levels on the combined static frame — the
